@@ -206,67 +206,35 @@ object Graft {
 
   /**
    * The FULL Solr request loop in one call: parse the query string,
-   * filter the index table (term pushdown where eligible), BM25-rank
-   * the hits by the query's positive analyzed terms with CORPUS-WIDE
-   * statistics (Solr's idf scope), return the top-k with their stored
-   * fields. Ties break on the id column's string order; scores are
-   * rounded to 6 places (`score_r`) per the engine's float-parity
-   * discipline. A query with no rankable terms (pure filters/ranges)
-   * returns hits in id order with score 0.
+   * match it against the index, BM25-rank the hits by the query's
+   * positive analyzed terms with CORPUS-WIDE statistics (Solr's idf
+   * scope), return the top-k with their stored fields. Ties break on
+   * the id column's order; scores are rounded to 6 places (`score_r`)
+   * per the engine's float-parity discipline. A query with no rankable
+   * terms (pure filters/ranges) returns hits in id order with score 0
+   * (or the rounded `boost` alone, when given).
    *
    * Ranking scope: scores are computed against ONE analyzed field —
    * `rankField` when given, else the lexicographically-first analyzed
    * field (also the query's default field) — the Solr `df`-scoring
-   * shape for the common single-text-field store. The ranking pass
-   * re-tokenizes stored text in one corpus scan; serving latency-
-   * critical traffic from the postings themselves (tf = position-list
-   * length) is the documented next optimization, not done here.
+   * shape for the common single-text-field store; on a MULTIVALUED
+   * analyzed field every value scores (Lucene/Solr semantics).
+   *
+   * Query shape — Solr's distributed query phase, two scatter jobs with
+   * one task per part (see [[graft.index.RankedSearch]]): a stats job
+   * gathers global N / avgdl / df (ranked queries only), then a query
+   * job scores each part's live matches from positional postings and
+   * norms, keeps the part's top-k and fetches stored fields for those
+   * rows only; the driver merges at most parts × k rows. Clauses the
+   * index cannot answer exactly, and `boost`, are evaluated per
+   * candidate on the typed stored row. The call runs its jobs EAGERLY
+   * and returns a LOCAL frame: selecting from, collecting or reranking
+   * it runs no further scan.
    */
   def search(spark: SparkSession, store: String, q: String, topK: Int = 10,
              rankField: Option[String] = None,
-             boost: Option[String] = None): DataFrame = {
-    import graft.index.SegmentShardSink
-    val marker = SegmentShardSink.readMarker(
-      spark.sessionState.newHadoopConf(), store)
-    val idx = openSegmentIndex(spark, store)
-    val textFields = marker.analyzed
-    // sorted: Set iteration order is hash-dependent above 4 elements —
-    // the default/ranked field must not vary between runs
-    val default = rankField.orElse(textFields.toSeq.sorted.headOption)
-      .getOrElse(marker.idCol)
-    val (pred, terms) = graft.search.SolrQueryString.compileWithTerms(
-      q, idx.schema, default, textFields)
-    val hits = idx.filter(pred)
-    val id = marker.idCol
-    // Solr's {!boost} / edismax boost= — a function query MULTIPLIED
-    // into the relevance score (per-row codegen'd math over stored
-    // fields; parity discipline per FunctionQuery's scaladoc)
-    val boostCol = boost.map(graft.search.FunctionQuery.compile(_, idx.schema))
-    if (terms.isEmpty || !textFields.contains(default))
-      hits
-        .withColumn("score_r", boostCol.map(b => round(b, 6)).getOrElse(lit(0.0)))
-        .orderBy(col("score_r").desc, col(id)).limit(topK)
-    else {
-      // INDEX-SERVED scoring: tf/df/|d| come from postings + norms
-      // (SegmentSearch.bm25Scores, Solr's distributed-idf two-phase) —
-      // per-query work ∝ the queried terms' posting lists, never a
-      // corpus re-tokenize. Bit-identical to the previous
-      // Ranking.bm25-over-stored-values plan for single-valued fields;
-      // for MULTIVALUED analyzed fields this scores ALL values (the
-      // Lucene/Solr semantics) where the old corpus scan saw only the
-      // surfaced first value.
-      val scored = graft.index.SegmentSearch.bm25Scores(spark, store, default, terms)
-        .withColumnRenamed("doc_id", "__sid")
-      val base = coalesce(col("score"), lit(0.0))
-      hits.join(scored, col(id) === col("__sid"), "left")
-        .drop("__sid")
-        .withColumn("score_r",
-          round(boostCol.map(base * _).getOrElse(base), 6))
-        .drop("score")
-        .orderBy(col("score_r").desc, col(id))
-        .limit(topK)
-    }
-  }
+             boost: Option[String] = None): DataFrame =
+    graft.index.RankedSearch.search(spark, store, q, topK, rankField, boost)
 
   /**
    * Solr's `/export` handler: the FULL (not top-k) result set of a

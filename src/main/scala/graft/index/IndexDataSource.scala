@@ -3,13 +3,14 @@ package graft.index
 import graft.util.SerializableHadoopConf
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{InternalRow, expressions}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{NamedReference, NullOrdering, SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min, Sum}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, StringStartsWith}
-import org.apache.spark.sql.types.{DataType, DateType, DoubleType, LongType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{BooleanType, DataType, DateType, DoubleType, LongType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -60,23 +61,36 @@ class IndexDataSource extends TableProvider with DataSourceRegister {
     p
   }
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val store = storePath(options)
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val cols = SegmentShardSink.storedColumns(conf, store)
-    require(cols.nonEmpty,
-      s"no column inventory in $store/_graft_segment_commit.json — not a graft segment store?")
-    // numeric fields surface TYPED (the Solr plong/pdouble analog);
-    // their terms carry the sortable encoding, decoded on read.
-    // `.option("multivalued", "array")` surfaces multivalued fields as
-    // array<string> with ALL stored values in order — Solr's
-    // multiValued=true response shape; the default keeps the
-    // first-value scalar contract (and its pushdown exclusions).
-    val marker = SegmentShardSink.readMarker(conf, store)
-    val asArray = "array".equalsIgnoreCase(options.get("multivalued"))
-    StructType(cols.map { c =>
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    IndexDataSource.schemaOf(
+      SegmentShardSink.readMarker(
+        SparkSession.active.sessionState.newHadoopConf(), storePath(options)),
+      "array".equalsIgnoreCase(options.get("multivalued")))
+
+  override def getTable(schema: StructType, partitioning: Array[Transform],
+                        properties: util.Map[String, String]): Table =
+    new IndexTable(schema, properties.get("path"))
+
+  override def supportsExternalMetadata(): Boolean = true
+}
+
+object IndexDataSource {
+
+  /** The index table's schema from the store marker's `columns`
+    * inventory (metadata only; no segment opened). Numeric fields
+    * surface TYPED (the Solr plong/pdouble analog); their terms carry
+    * the sortable encoding, decoded on read. `multivaluedAsArray`
+    * surfaces multivalued fields as array<string> with ALL stored
+    * values in order — Solr's multiValued=true response shape; the
+    * default keeps the first-value scalar contract (and its pushdown
+    * exclusions). */
+  private[graft] def schemaOf(marker: SegmentShardSink.StoreMarker,
+                              multivaluedAsArray: Boolean): StructType = {
+    require(marker.columns.nonEmpty,
+      "no column inventory in the store marker — not a graft segment store?")
+    StructType(marker.columns.map { c =>
       val dt =
-        if (asArray && marker.multivalued.contains(c))
+        if (multivaluedAsArray && marker.multivalued.contains(c))
           org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
         else marker.kindOf(c) match {
           case 'l' => LongType
@@ -90,11 +104,10 @@ class IndexDataSource extends TableProvider with DataSourceRegister {
     })
   }
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new IndexTable(schema, properties.get("path"))
-
-  override def supportsExternalMetadata(): Boolean = true
+  /** Numeric-term kind of every typed field (absent = string). */
+  private[index] def numericOf(marker: SegmentShardSink.StoreMarker): Map[String, Char] =
+    (marker.numericLong ++ marker.numericDouble ++ marker.numericTs ++
+      marker.numericDate ++ marker.numericTsNtz).iterator.map(f => f -> marker.kindOf(f)).toMap
 }
 
 private[index] class IndexTable(tableSchema: StructType, store: String)
@@ -147,12 +160,7 @@ private[index] class IndexTable(tableSchema: StructType, store: String)
     //    VERBATIM stored value — a pushed whole-value lookup would
     //    silently miss (`text = "Spark"` vs token `spark`).
     // Residual Spark evaluation keeps the table honest for both.
-    val numeric: Map[String, Char] =
-      marker.numericLong.iterator.map(_ -> 'l').toMap ++
-        marker.numericDouble.iterator.map(_ -> 'd') ++
-        marker.numericTs.iterator.map(_ -> 't') ++
-        marker.numericDate.iterator.map(_ -> 'a') ++
-        marker.numericTsNtz.iterator.map(_ -> 'u')
+    val numeric = IndexDataSource.numericOf(marker)
     // array surfacing (see inferSchema): the affected fields were
     // already excluded from filter/TopN/aggregate pushdown as
     // multivalued, so only row materialization changes shape
@@ -258,48 +266,8 @@ private[index] class IndexScanBuilder(full: StructType, store: String,
     with SupportsPushDownAggregates with SupportsPushDownLimit
     with SupportsPushDownTopN {
 
-  /** A pushed comparison value as the INDEXED term: strings verbatim,
-    * numeric fields through the sortable encoding (so the dictionary
-    * range scan runs in numeric order). None = not translatable →
-    * that filter stays residual. */
-  private def termOf(field: String, v: Any): Option[String] =
-    numeric.getOrElse(field, 's') match {
-      case 'l' => v match {
-        case n @ (_: java.lang.Long | _: java.lang.Integer |
-                  _: java.lang.Short | _: java.lang.Byte) =>
-          Some(NumericTerms.encodeLong(n.asInstanceOf[java.lang.Number].longValue()))
-        case _ => None
-      }
-      case 'd' => v match {
-        case n @ (_: java.lang.Double | _: java.lang.Float) =>
-          Some(NumericTerms.encodeDouble(n.asInstanceOf[java.lang.Number].doubleValue()))
-        case _ => None
-      }
-      case 't' => v match {
-        // java.sql vs java.time depends on spark.sql.datetime.java8API
-        case ts: java.sql.Timestamp =>
-          Some(NumericTerms.encodeLong(NumericTerms.microsOf(ts)))
-        case i: java.time.Instant =>
-          Some(NumericTerms.encodeLong(NumericTerms.microsOf(i)))
-        case _ => None
-      }
-      case 'a' => v match {
-        case d: java.sql.Date =>
-          Some(NumericTerms.encodeLong(d.toLocalDate.toEpochDay))
-        case d: java.time.LocalDate =>
-          Some(NumericTerms.encodeLong(d.toEpochDay))
-        case _ => None
-      }
-      case 'u' => v match {
-        case l: java.time.LocalDateTime =>
-          Some(NumericTerms.encodeLong(NumericTerms.microsOfNtz(l)))
-        case _ => None
-      }
-      case _ => v match {
-        case s: String => Some(s)
-        case _ => None
-      }
-    }
+  private val translator = new PushTranslator(full.fieldNames.toSet, multivalued, analyzed,
+    numeric)
 
   private var required: StructType = full
   private var pushed: Array[Filter] = Array.empty
@@ -463,82 +431,7 @@ private[index] class IndexScanBuilder(full: StructType, store: String,
     * order is code-point order, identical to Catalyst's UTF8String
     * comparison — so they are NOT returned for re-evaluation. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    def pushable(a: String) = full.fieldNames.contains(a) &&
-      !multivalued.contains(a) && !analyzed.contains(a)
-
-    // a single filter as a pushable leaf (or a whole OR tree of them)
-    def leafOf(f: Filter): Option[PushedQuery] = f match {
-      case EqualTo(a, v) if pushable(a) && v != null =>
-        termOf(a, v).map(t => TermQuery(a, Seq(t)))
-      case In(a, vs) if pushable(a) && vs.nonEmpty && vs.forall(_ != null) =>
-        val ts = vs.toSeq.map(termOf(a, _))
-        if (ts.forall(_.isDefined)) Some(TermQuery(a, ts.flatten)) else None
-      case GreaterThan(a, v) if pushable(a) && v != null =>
-        termOf(a, v).map(t => RangeQuery(a, Some(t), lowerInc = false, None, upperInc = true))
-      case GreaterThanOrEqual(a, v) if pushable(a) && v != null =>
-        termOf(a, v).map(t => RangeQuery(a, Some(t), lowerInc = true, None, upperInc = true))
-      case LessThan(a, v) if pushable(a) && v != null =>
-        termOf(a, v).map(t => RangeQuery(a, None, lowerInc = true, Some(t), upperInc = false))
-      case LessThanOrEqual(a, v) if pushable(a) && v != null =>
-        termOf(a, v).map(t => RangeQuery(a, None, lowerInc = true, Some(t), upperInc = true))
-      case StringStartsWith(a, p) if pushable(a) && p != null =>
-        Some(RangeQuery(a, Some(p), lowerInc = true,
-          SegmentIndex.nextAfterPrefix(p), upperInc = false))
-      case IsNull(a) if pushable(a) =>
-        // docs NOT holding the field: whole-segment complement of
-        // field presence
-        Some(NotQuery(RangeQuery(a, None, lowerInc = true, None, upperInc = true), None))
-      case org.apache.spark.sql.sources.Not(inner) =>
-        // MUST_NOT over a single-field term/range leaf: SQL `f <> v` /
-        // `NOT f LIKE 'p%'` is true only where f is non-null, so the
-        // base is field presence. A Not over an OR/IsNull stays
-        // residual (Catalyst pushes NOT inward before we see it).
-        leafOf(inner).collect {
-          case t @ TermQuery(f, _) => NotQuery(t, Some(f))
-          case r @ RangeQuery(f, _, _, _, _) => NotQuery(r, Some(f))
-        }
-      case org.apache.spark.sql.sources.Or(l, r) =>
-        for { a <- leafOf(l); b <- leafOf(r) } yield {
-          def flat(q: PushedQuery): Seq[PushedQuery] = q match {
-            case OrQuery(bs) => bs
-            case other => Seq(other)
-          }
-          OrQuery(flat(a) ++ flat(b))
-        }
-      case _ => None
-    }
-
-    // tighten range leaves on the same field into ONE range (both
-    // bounds of a BETWEEN land in a single dictionary scan)
-    def mergeRanges(ls: Seq[PushedQuery]): Seq[PushedQuery] = {
-      val ranges = ls.collect { case r: RangeQuery => r }
-      val rest = ls.filterNot(_.isInstanceOf[RangeQuery])
-      val merged = ranges.groupBy(_.field).toSeq.sortBy(_._1).map { case (_, rs) =>
-        rs.reduce { (a, b) =>
-          val (lo, loInc) = (a.lower, b.lower) match {
-            case (None, x) => (x, b.lowerInc)
-            case (x, None) => (x, a.lowerInc)
-            case (Some(x), Some(y)) =>
-              val c = SegmentIndex.cpCompare(x, y)
-              if (c > 0) (Some(x), a.lowerInc)
-              else if (c < 0) (Some(y), b.lowerInc)
-              else (Some(x), a.lowerInc && b.lowerInc)
-          }
-          val (hi, hiInc) = (a.upper, b.upper) match {
-            case (None, x) => (x, b.upperInc)
-            case (x, None) => (x, a.upperInc)
-            case (Some(x), Some(y)) =>
-              val c = SegmentIndex.cpCompare(x, y)
-              if (c < 0) (Some(x), a.upperInc)
-              else if (c > 0) (Some(y), b.upperInc)
-              else (Some(x), a.upperInc && b.upperInc)
-          }
-          RangeQuery(a.field, lo, loInc, hi, hiInc)
-        }
-      }
-      rest ++ merged
-    }
-
+    import translator.{leafOf, pushable}
     // absorb EVERY pushable conjunct (Spark hands the predicate as an
     // AND of filters): one leaf pushes alone, several push as a MUST
     // intersection (Lucene BooleanQuery +clauses). Non-pushable
@@ -560,7 +453,7 @@ private[index] class IndexScanBuilder(full: StructType, store: String,
     }.toSeq
     val leaves = leaves0 ++ presence
     val leafIdx = leaves.map(_._1).toSet
-    val merged = mergeRanges(leaves.map(_._2))
+    val merged = PushTranslator.mergeRanges(leaves.map(_._2))
     val q: PushedQuery =
       if (merged.isEmpty) MatchAll
       else if (merged.length == 1) merged.head
@@ -626,6 +519,191 @@ private[index] class IndexScanBuilder(full: StructType, store: String,
     new IndexScan(store, required, fullQuery, countPushed, limit, topN, facetFields, aggs,
       numeric, arrayFields, snapshot, useColumnar)
   }
+}
+
+/**
+ * Predicate → [[PushedQuery]] translation, shared by the DSv2 scan
+ * builder (Spark's translated `sources.Filter`s) and
+ * [[RankedSearch]] (resolved Catalyst predicates). Only EXACT
+ * translations are produced — terms match whole values and ranges
+ * compare in code-point order, identical to Catalyst's UTF8String
+ * comparison — so a translated predicate needs no re-evaluation;
+ * anything else stays residual.
+ *
+ * Two field classes never push directly:
+ *  - MULTIVALUED: the relational surface shows their FIRST value, but
+ *    a posting lookup matches ANY value;
+ *  - ANALYZED: postings hold TOKENS, the relational surface the
+ *    VERBATIM stored value (`text = "Spark"` vs token `spark`) — except
+ *    the query-string whole-token match, which asks token membership
+ *    under the index's own analyzer (scalar analyzed fields only).
+ */
+private[index] final class PushTranslator(fields: Set[String], multivalued: Set[String],
+                                          analyzed: Set[String],
+                                          numeric: Map[String, Char]) {
+
+  def pushable(a: String): Boolean =
+    fields.contains(a) && !multivalued.contains(a) && !analyzed.contains(a)
+
+  /** A pushed comparison value as the INDEXED term: strings verbatim,
+    * numeric fields through the sortable encoding (so the dictionary
+    * range scan runs in numeric order). None = not translatable →
+    * that filter stays residual. */
+  private def termOf(field: String, v: Any): Option[String] =
+    numeric.getOrElse(field, 's') match {
+      case 'l' => v match {
+        case n @ (_: java.lang.Long | _: java.lang.Integer |
+                  _: java.lang.Short | _: java.lang.Byte) =>
+          Some(NumericTerms.encodeLong(n.asInstanceOf[java.lang.Number].longValue()))
+        case _ => None
+      }
+      case 'd' => v match {
+        case n @ (_: java.lang.Double | _: java.lang.Float) =>
+          Some(NumericTerms.encodeDouble(n.asInstanceOf[java.lang.Number].doubleValue()))
+        case _ => None
+      }
+      case 't' => v match {
+        // java.sql vs java.time depends on spark.sql.datetime.java8API
+        case ts: java.sql.Timestamp =>
+          Some(NumericTerms.encodeLong(NumericTerms.microsOf(ts)))
+        case i: java.time.Instant =>
+          Some(NumericTerms.encodeLong(NumericTerms.microsOf(i)))
+        case _ => None
+      }
+      case 'a' => v match {
+        case d: java.sql.Date =>
+          Some(NumericTerms.encodeLong(d.toLocalDate.toEpochDay))
+        case d: java.time.LocalDate =>
+          Some(NumericTerms.encodeLong(d.toEpochDay))
+        case _ => None
+      }
+      case 'u' => v match {
+        case l: java.time.LocalDateTime =>
+          Some(NumericTerms.encodeLong(NumericTerms.microsOfNtz(l)))
+        case _ => None
+      }
+      case _ => v match {
+        case s: String => Some(s)
+        case _ => None
+      }
+    }
+
+  // a single filter as a pushable leaf (or a whole OR tree of them)
+  def leafOf(f: Filter): Option[PushedQuery] = f match {
+    case EqualTo(a, v) if pushable(a) && v != null =>
+      termOf(a, v).map(t => TermQuery(a, Seq(t)))
+    case In(a, vs) if pushable(a) && vs.nonEmpty && vs.forall(_ != null) =>
+      val ts = vs.toSeq.map(termOf(a, _))
+      if (ts.forall(_.isDefined)) Some(TermQuery(a, ts.flatten)) else None
+    case GreaterThan(a, v) if pushable(a) && v != null =>
+      termOf(a, v).map(t => RangeQuery(a, Some(t), lowerInc = false, None, upperInc = true))
+    case GreaterThanOrEqual(a, v) if pushable(a) && v != null =>
+      termOf(a, v).map(t => RangeQuery(a, Some(t), lowerInc = true, None, upperInc = true))
+    case LessThan(a, v) if pushable(a) && v != null =>
+      termOf(a, v).map(t => RangeQuery(a, None, lowerInc = true, Some(t), upperInc = false))
+    case LessThanOrEqual(a, v) if pushable(a) && v != null =>
+      termOf(a, v).map(t => RangeQuery(a, None, lowerInc = true, Some(t), upperInc = true))
+    case StringStartsWith(a, p) if pushable(a) && p != null =>
+      Some(RangeQuery(a, Some(p), lowerInc = true,
+        SegmentIndex.nextAfterPrefix(p), upperInc = false))
+    case IsNull(a) if pushable(a) =>
+      // docs NOT holding the field: whole-segment complement of
+      // field presence
+      Some(NotQuery(RangeQuery(a, None, lowerInc = true, None, upperInc = true), None))
+    case org.apache.spark.sql.sources.Not(inner) =>
+      // MUST_NOT over a single-field term/range leaf: SQL `f <> v` /
+      // `NOT f LIKE 'p%'` is true only where f is non-null, so the
+      // base is field presence. A Not over an OR/IsNull stays
+      // residual (Catalyst pushes NOT inward before we see it).
+      leafOf(inner).collect {
+        case t @ TermQuery(f, _) => NotQuery(t, Some(f))
+        case r @ RangeQuery(f, _, _, _, _) => NotQuery(r, Some(f))
+      }
+    case org.apache.spark.sql.sources.Or(l, r) =>
+      for { a <- leafOf(l); b <- leafOf(r) } yield PushTranslator.or(a, b)
+    case _ => None
+  }
+
+  /** A resolved Catalyst predicate as one exact pushed query: AND/OR
+    * trees whose every leaf translates (a partially-translatable OR
+    * must stay whole — dropping a branch would narrow the match set),
+    * leaves through Spark's own `sources.Filter` translation, plus the
+    * query-string whole-token match on a scalar analyzed field
+    * ([[graft.search.SolrQueryString.analyzedTokenOf]]). */
+  def exprOf(e: expressions.Expression): Option[PushedQuery] = e match {
+    case expressions.Literal(true, BooleanType) => Some(MatchAll)
+    case expressions.And(l, r) =>
+      for { a <- exprOf(l); b <- exprOf(r) } yield PushTranslator.and(Seq(a, b))
+    case expressions.Or(l, r) =>
+      for { a <- exprOf(l); b <- exprOf(r) } yield PushTranslator.or(a, b)
+    case expressions.RLike(expressions.Lower(a: expressions.AttributeReference),
+                           expressions.Literal(p: UTF8String, StringType))
+        if analyzed.contains(a.name) && !multivalued.contains(a.name) =>
+      graft.search.SolrQueryString.analyzedTokenOf(p.toString)
+        .map(t => TermQuery(a.name, Seq(t)))
+    case other => org.apache.spark.sql.GraftBridge.translateFilter(other).flatMap(leafOf)
+  }
+}
+
+private[index] object PushTranslator {
+
+  // tighten range leaves on the same field into ONE range (both
+  // bounds of a BETWEEN land in a single dictionary scan)
+  def mergeRanges(ls: Seq[PushedQuery]): Seq[PushedQuery] = {
+    val ranges = ls.collect { case r: RangeQuery => r }
+    val rest = ls.filterNot(_.isInstanceOf[RangeQuery])
+    val merged = ranges.groupBy(_.field).toSeq.sortBy(_._1).map { case (_, rs) =>
+      rs.reduce { (a, b) =>
+        val (lo, loInc) = (a.lower, b.lower) match {
+          case (None, x) => (x, b.lowerInc)
+          case (x, None) => (x, a.lowerInc)
+          case (Some(x), Some(y)) =>
+            val c = SegmentIndex.cpCompare(x, y)
+            if (c > 0) (Some(x), a.lowerInc)
+            else if (c < 0) (Some(y), b.lowerInc)
+            else (Some(x), a.lowerInc && b.lowerInc)
+        }
+        val (hi, hiInc) = (a.upper, b.upper) match {
+          case (None, x) => (x, b.upperInc)
+          case (x, None) => (x, a.upperInc)
+          case (Some(x), Some(y)) =>
+            val c = SegmentIndex.cpCompare(x, y)
+            if (c < 0) (Some(x), a.upperInc)
+            else if (c > 0) (Some(y), b.upperInc)
+            else (Some(x), a.upperInc && b.upperInc)
+        }
+        RangeQuery(a.field, lo, loInc, hi, hiInc)
+      }
+    }
+    rest ++ merged
+  }
+
+
+  /** SHOULD union of two exact pushed queries (a match-all branch
+    * absorbs the union). */
+  def or(a: PushedQuery, b: PushedQuery): PushedQuery = (a, b) match {
+    case (MatchAll, _) | (_, MatchAll) => MatchAll
+    case _ =>
+      def flat(q: PushedQuery): Seq[PushedQuery] = q match {
+        case OrQuery(bs) => bs
+        case other => Seq(other)
+      }
+      OrQuery(flat(a) ++ flat(b))
+  }
+
+  /** MUST conjunction of exact pushed queries: match-all branches drop
+    * out (the posting algebra has no match-all branch), same-field
+    * ranges tighten into one. */
+  def and(qs: Seq[PushedQuery]): PushedQuery =
+    mergeRanges(qs.flatMap {
+      case MatchAll => Nil
+      case AndQuery(bs) => bs
+      case other => Seq(other)
+    }) match {
+      case Seq() => MatchAll
+      case Seq(one) => one
+      case bs => AndQuery(bs)
+    }
 }
 
 private[index] class IndexScan(store: String, required: StructType,
@@ -761,17 +839,7 @@ private[index] class IndexReaderFactory(conf: SerializableHadoopConf,
                                         columnar: Boolean = true)
     extends PartitionReaderFactory {
 
-  /** Stored/indexed term → the typed row value: numeric fields decode
-    * the sortable encoding (timestamps surface as Spark's internal
-    * epoch-micros Long, dates as epoch-days Int), the rest as UTF8
-    * strings. */
-  private def conv(field: String): String => Any =
-    numeric.getOrElse(field, 's') match {
-      case 'l' | 't' | 'u' => s => NumericTerms.decodeLong(s)
-      case 'a' => s => NumericTerms.decodeLong(s).toInt
-      case 'd' => s => NumericTerms.decodeDouble(s)
-      case _ => s => UTF8String.fromString(s)
-    }
+  private def conv(field: String): String => Any = DocRows.conv(numeric, field)
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     if (facetFields.nonEmpty) new PartitionReader[InternalRow] {
@@ -954,7 +1022,7 @@ private[index] class IndexReaderFactory(conf: SerializableHadoopConf,
                 val dicts = new Array[Array[Any]](cols.length)
                 var i = 0
                 while (i < cols.length) {
-                  dicts(i) = cols(i)._1.map(convs(i))
+                  dicts(i) = cols(i)._1.map(docRows.convs(i))
                   i += 1
                 }
                 ords.iterator.map { o =>
@@ -965,7 +1033,7 @@ private[index] class IndexReaderFactory(conf: SerializableHadoopConf,
                     if (ti >= 0) arr(j) = dicts(j)(ti)
                     j += 1
                   }
-                  new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(arr)
+                  new GenericInternalRow(arr)
                 }
               case None => reader.storedDocsAt(s, ords).iterator.map(docToRow)
             }
@@ -987,54 +1055,8 @@ private[index] class IndexReaderFactory(conf: SerializableHadoopConf,
         }
       }
       private var current: InternalRow = _
-
-      private val convs: Array[String => Any] = fields.map(conv)
-      // field name → output position, primitive-friendly: the row loop
-      // below runs once per STORED DOC of every scan — the Map +
-      // Option + fromSeq form allocated ~6 objects per doc and was a
-      // visible slice of corpus-scale index reads (q272's 1M-edge
-      // scan). First occurrence wins (the multivalued surfacing
-      // contract, same as SegmentIndex.firstValues).
-      private val fieldIdx = {
-        val m = new java.util.HashMap[String, Integer](fields.length * 2)
-        fields.indices.foreach(i => m.put(fields(i), i))
-        m
-      }
-
-      // output positions surfaced as array<string> (ALL stored values
-      // in order — the Solr multiValued response shape, option-gated)
-      private val isArray: Array[Boolean] = fields.map(arrayFields.contains)
-
-      private def docToRow(doc: SegmentIndex.Doc): InternalRow = {
-        val arr = new Array[Any](fields.length)
-        val it = doc.iterator
-        while (it.hasNext) {
-          val kv = it.next()
-          val i = fieldIdx.get(kv._1)
-          if (i != null) {
-            if (isArray(i)) {
-              val buf = arr(i) match {
-                case null =>
-                  val b = new scala.collection.mutable.ArrayBuffer[Any](4)
-                  arr(i) = b
-                  b
-                case b: scala.collection.mutable.ArrayBuffer[Any @unchecked] => b
-              }
-              buf += UTF8String.fromString(kv._2)
-            } else if (arr(i) == null) arr(i) = convs(i)(kv._2)
-          }
-        }
-        var i = 0
-        while (i < arr.length) {
-          arr(i) match {
-            case b: scala.collection.mutable.ArrayBuffer[Any @unchecked] =>
-              arr(i) = new org.apache.spark.sql.catalyst.util.GenericArrayData(b.toArray)
-            case _ =>
-          }
-          i += 1
-        }
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(arr)
-      }
+      private val docRows = new DocRows(fields, numeric, arrayFields)
+      private def docToRow(doc: SegmentIndex.Doc): InternalRow = docRows(doc)
 
       override def next(): Boolean =
         if (!rows.hasNext) false
@@ -1042,5 +1064,76 @@ private[index] class IndexReaderFactory(conf: SerializableHadoopConf,
 
       override def get(): InternalRow = current
       override def close(): Unit = ()
+    }
+}
+
+/** Stored doc → typed [[InternalRow]] of `fields`, the index table's
+  * row surface: numeric fields decode their sortable encoding,
+  * multivalued fields surface their FIRST value — or, when in
+  * `arrayFields`, all stored values in order — and absent fields are
+  * null. `extra` trailing slots are left null for the caller. */
+private[index] final class DocRows(fields: Array[String], numeric: Map[String, Char],
+                                   arrayFields: Set[String] = Set.empty) {
+  val convs: Array[String => Any] = fields.map(DocRows.conv(numeric, _))
+  // field name → output position, primitive-friendly: the row loop
+  // below runs once per STORED DOC of every scan — the Map + Option +
+  // fromSeq form allocated ~6 objects per doc and was a visible slice
+  // of corpus-scale index reads (q272's 1M-edge scan). First
+  // occurrence wins (the multivalued surfacing contract, same as
+  // SegmentIndex.firstValues).
+  private val fieldIdx = {
+    val m = new java.util.HashMap[String, Integer](fields.length * 2)
+    fields.indices.foreach(i => m.put(fields(i), i))
+    m
+  }
+
+  // output positions surfaced as array<string> (ALL stored values in
+  // order — the Solr multiValued response shape, option-gated)
+  private val isArray: Array[Boolean] = fields.map(arrayFields.contains)
+
+  def apply(doc: SegmentIndex.Doc, extra: Int = 0): GenericInternalRow = {
+    val arr = new Array[Any](fields.length + extra)
+    val it = doc.iterator
+    while (it.hasNext) {
+      val kv = it.next()
+      val i = fieldIdx.get(kv._1)
+      if (i != null) {
+        if (isArray(i)) {
+          val buf = arr(i) match {
+            case null =>
+              val b = new scala.collection.mutable.ArrayBuffer[Any](4)
+              arr(i) = b
+              b
+            case b: scala.collection.mutable.ArrayBuffer[Any @unchecked] => b
+          }
+          buf += UTF8String.fromString(kv._2)
+        } else if (arr(i) == null) arr(i) = convs(i)(kv._2)
+      }
+    }
+    var i = 0
+    while (i < fields.length) {
+      arr(i) match {
+        case b: scala.collection.mutable.ArrayBuffer[Any @unchecked] =>
+          arr(i) = new org.apache.spark.sql.catalyst.util.GenericArrayData(b.toArray)
+        case _ =>
+      }
+      i += 1
+    }
+    new GenericInternalRow(arr)
+  }
+}
+
+private[index] object DocRows {
+
+  /** Stored/indexed term → the typed row value: numeric fields decode
+    * the sortable encoding (timestamps surface as Spark's internal
+    * epoch-micros Long, dates as epoch-days Int), the rest as UTF8
+    * strings. */
+  def conv(numeric: Map[String, Char], field: String): String => Any =
+    numeric.getOrElse(field, 's') match {
+      case 'l' | 't' | 'u' => s => NumericTerms.decodeLong(s)
+      case 'a' => s => NumericTerms.decodeLong(s).toInt
+      case 'd' => s => NumericTerms.decodeDouble(s)
+      case _ => s => UTF8String.fromString(s)
     }
 }

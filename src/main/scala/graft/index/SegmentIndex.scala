@@ -3143,38 +3143,49 @@ object SegmentIndex {
       (matchAllCount, totalTokens, df.toMap)
     }
 
-    /** The shard-local half of distributed BM25 scoring: for every
-      * LIVE doc matching ≥1 query term on the ANALYZED `field`, the
-      * exact score under the GLOBAL statistics handed in (nDocs,
-      * avgdl, df — combined across shards by the coordinator, Solr's
-      * distributed-idf design). tf comes from positional postings,
-      * |d| from norms; per-doc contributions sum in `terms` order, so
-      * the doubles equal [[graft.text.Ranking.bm25]]'s fixed-order
-      * column sum bit-for-bit. Work ∝ postings of the QUERIED terms —
-      * never a corpus scan. Returns (id value, score). */
+    /** THE BM25 kernel — the one per-ordinal scoring loop every
+      * index-served ranking runs: for each LIVE doc of segment `s`
+      * holding ≥1 query term on the ANALYZED `field`, its exact score
+      * under the GLOBAL statistics handed in (nDocs, avgdl, df —
+      * combined across shards by the coordinator, Solr's
+      * distributed-idf design). tf comes from positional postings, |d|
+      * from norms; per-doc contributions sum in `terms` order, so the
+      * doubles equal [[graft.text.Ranking.bm25]]'s fixed-order column
+      * sum bit-for-bit. Work ∝ postings of the QUERIED terms — never a
+      * segment scan. Returns ordinal → score. */
+    def bm25Segment(s: SegmentMeta, field: String, terms: Seq[String], k1: Double,
+                    b: Double, nDocs: Double, avgdl: Double,
+                    df: Map[String, Long]): mutable.LinkedHashMap[Int, Double] = {
+      val dels = readDels(fs, dir, s)
+      val post = readPostingsPositionsField(fs, dir, s.name, field)
+      lazy val norms = segNorms(s, field) // once per segment, only if a term hits
+      val acc = mutable.LinkedHashMap.empty[Int, Double]
+      terms.foreach { t =>
+        df.get(t).foreach { dfT =>
+          val idf = math.log(1.0 + ((nDocs - dfT.toDouble) + 0.5) / (dfT.toDouble + 0.5))
+          post.getOrElse(t, Array.empty[(Int, Array[Int])]).foreach {
+            case (ord, positions) =>
+              if (!dels.contains(ord) && positions.length > 0) {
+                val tf = positions.length.toDouble
+                val dl = norms(ord).toDouble
+                val c = idf * (tf * k1 + tf) /
+                  (tf + k1 * ((1.0 - b) + b * dl / avgdl))
+                acc.update(ord, acc.getOrElse(ord, 0.0) + c)
+              }
+          }
+        }
+      }
+      acc
+    }
+
+    /** The shard-local half of distributed BM25 scoring as (id value,
+      * score) pairs: [[bm25Segment]] over every segment, each scored
+      * doc's `idField` read from its stored fields. */
     def bm25Scores(field: String, terms: Seq[String], k1: Double, b: Double,
                    nDocs: Double, avgdl: Double, df: Map[String, Long],
                    idField: String): Iterator[(String, Double)] =
       commit.segments.iterator.flatMap { s =>
-        val dels = readDels(fs, dir, s)
-        val post = readPostingsPositionsField(fs, dir, s.name, field)
-        lazy val norms = segNorms(s, field) // once per segment, only if a term hits
-        val acc = mutable.LinkedHashMap.empty[Int, Double]
-        terms.foreach { t =>
-          df.get(t).foreach { dfT =>
-            val idf = math.log(1.0 + ((nDocs - dfT.toDouble) + 0.5) / (dfT.toDouble + 0.5))
-            post.getOrElse(t, Array.empty[(Int, Array[Int])]).foreach {
-              case (ord, positions) =>
-                if (!dels.contains(ord) && positions.length > 0) {
-                  val tf = positions.length.toDouble
-                  val dl = norms(ord).toDouble
-                  val c = idf * (tf * k1 + tf) /
-                    (tf + k1 * ((1.0 - b) + b * dl / avgdl))
-                  acc.update(ord, acc.getOrElse(ord, 0.0) + c)
-                }
-            }
-          }
-        }
+        val acc = bm25Segment(s, field, terms, k1, b, nDocs, avgdl, df)
         if (acc.isEmpty) Iterator.empty
         else {
           val ords = acc.keys.toArray.sorted

@@ -459,22 +459,6 @@ object SegmentShardSink {
       numericTsNtz = strSet("numeric_ts_ntz"))
   }
 
-  /** Stored-field inventory from the store marker (written by
-    * [[write]]); empty for a pre-columns-marker store. */
-  private[index] def storedColumns(conf: org.apache.hadoop.conf.Configuration,
-                                   store: String): Seq[String] = {
-    val p = new Path(store, "_graft_segment_commit.json")
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return Nil
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    "\"columns\":\\[(.*?)\\]".r.findFirstMatchIn(txt) match {
-      case Some(m) if m.group(1).nonEmpty =>
-        m.group(1).split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\""))
-      case _ => Nil
-    }
-  }
-
   /** part-NNNNN dirs under a store, ascending. */
   private[graft] def partIndexDirs(spark: SparkSession, store: String): Seq[String] =
     partDirs(spark, store)

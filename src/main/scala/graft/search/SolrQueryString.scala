@@ -66,6 +66,29 @@ object SolrQueryString {
     (c, p.positiveTerms)
   }
 
+  private val TokenPrefix = "(^|[^a-z0-9])"
+  private val TokenSuffix = "([^a-z0-9]|$)"
+
+  /** The whole-token regex an analyzed `field:term` compiles to, run
+    * over `lower(field)`. */
+  private def tokenPattern(term: String): String =
+    TokenPrefix + java.util.regex.Pattern.quote(term) + TokenSuffix
+
+  /** Inverse of the whole-token regex: the analyzed token `pattern`
+    * matches, when it is exactly one token of the index analyzer
+    * ([[graft.index.SegmentIndex.analyze]] — lowercase ASCII
+    * alphanumerics). `rlike(lower(f), pattern)` then holds exactly
+    * for the docs in that token's postings, so index-served callers
+    * can answer it as a posting lookup. */
+  private[graft] def analyzedTokenOf(pattern: String): Option[String] =
+    if (!pattern.startsWith(TokenPrefix) || !pattern.endsWith(TokenSuffix)) None
+    else {
+      val quoted = pattern.substring(TokenPrefix.length, pattern.length - TokenSuffix.length)
+      Some(quoted.stripPrefix("\\Q").stripSuffix("\\E"))
+        .filter(t => t.nonEmpty && t.forall(c => (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')))
+        .filter(t => tokenPattern(t) == pattern)
+    }
+
   private def isNumeric(dt: DataType): Boolean = dt match {
     case IntegerType | LongType | ShortType | DoubleType | FloatType => true
     case _ => false
@@ -263,8 +286,7 @@ object SolrQueryString {
       * lowercase alphanumeric token with non-token (or edge) chars on
       * both sides. */
     private def tokenMatch(c: Column, term: String): Column =
-      lower(c).rlike("(^|[^a-z0-9])" + java.util.regex.Pattern.quote(term.toLowerCase) +
-        "([^a-z0-9]|$)")
+      lower(c).rlike(tokenPattern(term.toLowerCase))
 
     /** Phrase = the token sequence with single non-token separators;
       * slop > 0 additionally admits up to `slop` whole tokens in each

@@ -12,6 +12,12 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** Spark's own Catalyst → `sources.Filter` translation (the one DSv2
+    * filter pushdown hands to `SupportsPushDownFilters`); protected[sql]. */
+  def translateFilter(e: Expression): Option[sources.Filter] =
+    execution.datasources.DataSourceStrategy.translateFilter(
+      e, supportNestedPredicatePushdown = true)
+
   /** `types.AbstractDataType` is private[sql] in Spark 4; expressions
     * outside this package need it to declare `ExpectsInputTypes.
     * inputTypes`. The alias is the standard visibility bridge. */

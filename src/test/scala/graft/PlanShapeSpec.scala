@@ -194,6 +194,35 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!p.contains("Filter ("), p.take(2000))
   }
 
+  test("Graft.search: exactly two scatter jobs, one task per part, and no part " +
+    "ships more than topK rows even when 500 docs tie at score 0") {
+    import spark.implicits._
+    val out = java.nio.file.Files.createTempDirectory("graft_search_jobs_").toString
+    // 500 lang:en docs, none holding the ranked term: every hit scores 0
+    graft.index.SegmentShardSink.write(
+      (0 until 600).map(i => (f"d$i%04d", s"words number $i", if (i < 500) "en" else "de"))
+        .toDF("id", "text", "lang"),
+      "id", out, shards = 4, analyzedFields = Set("text"))
+    val q = "text:zzz OR lang:en"
+    val sc = spark.sparkContext
+    val group = s"search-jobs-${System.nanoTime()}"
+    sc.setJobGroup(group, "Graft.search job-count lock", interruptOnCancel = false)
+    val rows = try Graft.search(spark, out, q, topK = 10).collect()
+    finally sc.clearJobGroup()
+    org.apache.spark.TestListenerBus.drain(sc)
+    assert(rows.map(_.getAs[String]("id")).toSeq === (0 until 10).map(i => f"d$i%04d"))
+    assert(rows.forall(_.getAs[Double]("score_r") == 0.0))
+    val jobs = sc.statusTracker.getJobIdsForGroup(group).toSeq.sorted
+    assert(jobs.length === 2, s"jobs: $jobs") // stats scatter + query scatter
+    val tasks = jobs.map(j => sc.statusTracker.getJobInfo(j).get.stageIds()
+      .map(st => sc.statusTracker.getStageInfo(st).get.numTasks()).sum)
+    assert(tasks === Seq(4, 4)) // one task per part dir in each job
+    // the bounded driver collect, by construction: each part ships its
+    // local top-K, never its 125 tied hits
+    val (_, _, parts) = graft.index.RankedSearch.scatter(spark, out, q, 10, None, None)
+    assert(parts.length === 4 && parts.map(_.length).sum === 40, parts.map(_.length).toSeq)
+  }
+
   test("q120 index TopN: term + sort + rows all pushed, global merge stays in Spark") {
     val p = plan("q120_index_topn")
     assert(p.contains("pushedTerm=p_brand:Brand#23"), p.take(2000))
